@@ -39,21 +39,13 @@ from typing import Sequence
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..plans.series import round_portable, round_portable_duck
+from ..plans.series import (
+    round_portable, round_portable_duck, row_frame, row_window,
+)
 from ..sources.tables import load
 
 __all__ = ["rolling_var_cvar", "rolling_sortino", "ulcer_index",
            "drawdown_episodes"]
-
-
-def _row_window(keys: Sequence[str], order: Sequence[str]):
-    return Window.partitionBy(*keys).orderBy(
-        *[F.col(c).asc() for c in order]
-    )
-
-
-def _frame(keys: Sequence[str], order: Sequence[str], n: int):
-    return _row_window(keys, order).rowsBetween(-(n - 1), 0)
 
 
 def _with_returns(df: DataFrame, value_col: str, keys: Sequence[str],
@@ -63,7 +55,7 @@ def _with_returns(df: DataFrame, value_col: str, keys: Sequence[str],
     events carry ``value == 0.0`` rows, and ANSI Spark raises on
     division by zero) are dropped so both engines' frame lists stay
     element-aligned (see module docstring)."""
-    wrow = _row_window(keys, order)
+    wrow = row_window(keys, order)
     prev = F.lag(value_col, 1).over(wrow)
     ret = F.when(prev != F.lit(0.0),
                  F.col(value_col) / prev - F.lit(1.0))
@@ -90,7 +82,7 @@ def rolling_var_cvar(df: DataFrame, value_col: str, keys: Sequence[str],
     k = tail_k(n, q)
     kf = float(k)
     r = _with_returns(df, value_col, keys, order)
-    w = _frame(keys, order, n)
+    w = row_frame(keys, order, n)
     staged = (
         r.withColumn("__arr", F.collect_list(F.col("__ret")).over(w))
         .withColumn("__srt", F.expr("array_sort(__arr)"))
@@ -121,7 +113,7 @@ def rolling_sortino(df: DataFrame, value_col: str, keys: Sequence[str],
     nf = float(n)
     tgt = float(target)
     r = _with_returns(df, value_col, keys, order)
-    w = _frame(keys, order, n)
+    w = row_frame(keys, order, n)
     staged = (
         r.withColumn("__arr", F.collect_list(F.col("__ret")).over(w))
         .withColumn("__mu", F.expr(
@@ -153,8 +145,8 @@ def ulcer_index(df: DataFrame, value_col: str, keys: Sequence[str],
     defines dd = 0.0 rather than dividing by zero.
     """
     nf = float(n)
-    wrow = _row_window(keys, order)
-    w = _frame(keys, order, n)
+    wrow = row_window(keys, order)
+    w = row_frame(keys, order, n)
     maxn = F.max(value_col).over(w)
     dd = F.when(
         maxn != F.lit(0.0),
@@ -191,7 +183,7 @@ def drawdown_episodes(df: DataFrame, value_col: str,
     integer CENTS before min/max (order-free exact); depth =
     trough/peak − 1 is the only float, rounded portably.
     """
-    wrow = _row_window(keys, order)
+    wrow = row_window(keys, order)
     pfx = wrow.rowsBetween(Window.unboundedPreceding, 0)
     cents = F.expr(f"CAST(round({value_col} * 100) AS BIGINT)")
     staged = (

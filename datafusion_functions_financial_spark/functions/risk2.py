@@ -36,7 +36,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..plans.series import round_portable, round_portable_duck
+from ..plans.series import round_portable, round_portable_duck, row_window
 from ..sources.tables import load
 
 __all__ = ["calmar", "omega", "information_ratio"]
@@ -46,18 +46,13 @@ QF = float(Q)
 US_PER_HOUR = 3_600_000_000
 
 
-def _row_window(keys: Sequence[str], order: Sequence[str]):
-    return Window.partitionBy(*keys).orderBy(
-        *[F.col(c).asc() for c in order])
-
-
 def calmar(df: DataFrame, value_col: str, keys: Sequence[str],
            order: Sequence[str]) -> DataFrame:
     """(keys..., n_returns, mean_ret, max_dd, calmar): per-period
     mean simple return divided by the maximum peak-to-trough
     drawdown of the raw value path. ``calmar`` is NULL for a key
     whose path never draws down (max_dd == 0)."""
-    wrow = _row_window(keys, order)
+    wrow = row_window(keys, order)
     wrun = wrow.rowsBetween(Window.unboundedPreceding, 0)
     prev = F.lag(value_col, 1).over(wrow)
     staged = (
@@ -93,7 +88,7 @@ def omega(df: DataFrame, value_col: str, keys: Sequence[str],
     """(keys..., n_returns, gain, loss, omega): Omega ratio at
     ``threshold`` — the quantized mass of returns above it divided
     by the quantized mass below it. NULL when the loss mass is 0."""
-    wrow = _row_window(keys, order)
+    wrow = row_window(keys, order)
     prev = F.lag(value_col, 1).over(wrow)
     rets = (
         df.withColumn("__ret", F.when(

@@ -23,18 +23,12 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..plans.series import round_portable, round_portable_duck
+from ..plans.series import (
+    round_portable, round_portable_duck, row_frame, row_window,
+)
 from ..sources.tables import load
 
 __all__ = ["bollinger", "rolling_volatility", "drawdown", "rolling_corr"]
-
-
-def _rows_window(keys: Sequence[str], order: Sequence[str], n: int):
-    return (
-        Window.partitionBy(*keys)
-        .orderBy(*[F.col(c).asc() for c in order])
-        .rowsBetween(-(n - 1), 0)
-    )
 
 
 def bollinger(df: DataFrame, value_col: str, keys: Sequence[str],
@@ -45,7 +39,7 @@ def bollinger(df: DataFrame, value_col: str, keys: Sequence[str],
     convention as the ``sma`` indicator). ``order`` must be unique
     within a key partition.
     """
-    w = _rows_window(keys, order, n)
+    w = row_frame(keys, order, n)
     full = F.count(F.col(value_col)).over(w) >= n
     mid = F.avg(F.col(value_col)).over(w)
     sd = F.stddev_samp(F.col(value_col)).over(w)
@@ -64,10 +58,10 @@ def rolling_volatility(df: DataFrame, value_col: str, keys: Sequence[str],
     Requires a strictly positive ``value_col``. NULL until ``n``
     returns (i.e. ``n + 1`` prices) are in the frame.
     """
-    wrow = Window.partitionBy(*keys).orderBy(*[F.col(c).asc() for c in order])
+    wrow = row_window(keys, order)
     ret = F.log(F.col(value_col) / F.lag(value_col, 1).over(wrow))
     with_ret = df.withColumn("__ret", ret)
-    w = _rows_window(keys, order, n)
+    w = row_frame(keys, order, n)
     full = F.count(F.col("__ret")).over(w) >= n
     vol = F.stddev_samp(F.col("__ret")).over(w)
     return with_ret.withColumn(
@@ -83,11 +77,7 @@ def drawdown(df: DataFrame, value_col: str, keys: Sequence[str],
     unbounded-preceding frame, which Spark evaluates incrementally —
     no per-row rescan.
     """
-    w = (
-        Window.partitionBy(*keys)
-        .orderBy(*[F.col(c).asc() for c in order])
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
+    w = row_window(keys, order).rowsBetween(Window.unboundedPreceding, 0)
     peak = F.max(F.col(value_col)).over(w)
     return df.withColumn(
         "drawdown", round_portable(F.col(value_col) / peak - F.lit(1.0))
@@ -112,7 +102,7 @@ def rolling_corr(df: DataFrame, x_col: str, y_col: str, keys: Sequence[str],
     bit-equal before rounding. ``order`` must be unique within a key
     for the frame contents themselves to be deterministic.
     """
-    w = _rows_window(keys, order, n)
+    w = row_frame(keys, order, n)
     staged = (
         df.withColumn("__xa", F.collect_list(F.col(x_col)).over(w))
         .withColumn("__ya", F.collect_list(F.col(y_col)).over(w))

@@ -28,23 +28,15 @@ from typing import Sequence
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..plans.series import round_portable, round_portable_duck
+from ..plans.series import (
+    round_portable, round_portable_duck, row_frame, row_window,
+)
 from ..sources.tables import load
 
 __all__ = ["rolling_beta", "rolling_sharpe", "rolling_moments",
            "rolling_ols_slope", "time_since_high", "return_autocorr"]
 
 SHARPE_ANNUALIZATION = 252.0
-
-
-def _row_window(keys: Sequence[str], order: Sequence[str]):
-    return Window.partitionBy(*keys).orderBy(
-        *[F.col(c).asc() for c in order]
-    )
-
-
-def _frame(keys: Sequence[str], order: Sequence[str], n: int):
-    return _row_window(keys, order).rowsBetween(-(n - 1), 0)
 
 
 def rolling_beta(df: DataFrame, y_col: str, x_col: str,
@@ -59,7 +51,7 @@ def rolling_beta(df: DataFrame, y_col: str, x_col: str,
     an ulp (different update formulas), which flipped a .5 rounding
     boundary at sf0.001 — sequential folds over the same frame order
     are bit-identical on both sides."""
-    w = _frame(keys, order, n)
+    w = row_frame(keys, order, n)
     with_arr = (
         df.withColumn("__xa", F.collect_list(F.col(x_col)).over(w))
         .withColumn("__ya", F.collect_list(F.col(y_col)).over(w))
@@ -96,12 +88,12 @@ def rolling_sharpe(df: DataFrame, value_col: str, keys: Sequence[str],
     ``sqrt(252) * mean_n(ret) / stddev_samp_n(ret)`` (zero risk-free
     rate). Returns are NULL-guarded for non-positive prices; NULL until
     ``n`` returns fill the frame or when returns are constant."""
-    wrow = _row_window(keys, order)
+    wrow = row_window(keys, order)
     prev = F.lag(value_col, 1).over(wrow)
     ok = (F.col(value_col) > 0) & (prev > 0)
     ret = F.when(ok, F.col(value_col) / prev - F.lit(1.0))
     with_r = df.withColumn("__ret", ret)
-    w = _frame(keys, order, n)
+    w = row_frame(keys, order, n)
     full = F.count(F.col("__ret")).over(w) >= n
     sharpe = (
         F.lit(float(SHARPE_ANNUALIZATION) ** 0.5)
@@ -122,7 +114,7 @@ def rolling_moments(df: DataFrame, value_col: str, keys: Sequence[str],
     docstring for why raw power sums are numerically unusable at price
     magnitudes). NULL until the frame is full and when the frame is
     flat (m2 = 0)."""
-    w = _frame(keys, order, n)
+    w = row_frame(keys, order, n)
     with_arr = df.withColumn(
         "__arr", F.collect_list(F.col(value_col)).over(w))
     nf = float(n)
@@ -166,10 +158,10 @@ def rolling_ols_slope(df: DataFrame, value_col: str,
     n ≥ 2)."""
     if n < 2:
         raise ValueError("rolling_ols_slope needs n >= 2")
-    wrow = _row_window(keys, order)
+    wrow = row_window(keys, order)
     with_rn = df.withColumn(
         "__rn", F.row_number().over(wrow).cast("bigint"))
-    w = _frame(keys, order, n)
+    w = row_frame(keys, order, n)
     full = F.count(F.lit(1)).over(w) >= n
     sx = F.sum("__rn").over(w)
     sy = F.sum(value_col).over(w)
@@ -193,7 +185,7 @@ def time_since_high(df: DataFrame, value_col: str,
     single Exchange+Sort): the running max, then the last row number
     where the value equalled it. The equality compares the same stored
     double against itself — exact on both engines."""
-    wrow = _row_window(keys, order)
+    wrow = row_window(keys, order)
     prefix = wrow.rowsBetween(Window.unboundedPreceding, 0)
     with_rn = df.withColumn(
         "__rn", F.row_number().over(wrow).cast("bigint"))
@@ -224,7 +216,7 @@ def return_autocorr(df: DataFrame, value_col: str,
     arithmetic (SCALING.md contribution rule); the final correlation
     is one identical double expression on both engines. NULL when
     fewer than 3 pairs or either variance is zero."""
-    wrow = _row_window(keys, order)
+    wrow = row_window(keys, order)
     prev = F.lag(value_col, 1).over(wrow)
     ok = (F.col(value_col) > 0) & (prev > 0)
     ret = F.when(ok, F.col(value_col) / prev - F.lit(1.0))

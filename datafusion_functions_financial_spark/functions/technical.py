@@ -21,20 +21,12 @@ from typing import Sequence
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..plans.series import round_portable, round_portable_duck
+from ..plans.series import (
+    round_portable, round_portable_duck, row_frame, row_window,
+)
 from ..sources.tables import load
 
 __all__ = ["atr", "stochastic", "obv", "log_returns", "roc", "donchian"]
-
-
-def _row_window(keys: Sequence[str], order: Sequence[str]):
-    return Window.partitionBy(*keys).orderBy(
-        *[F.col(c).asc() for c in order]
-    )
-
-
-def _frame(keys: Sequence[str], order: Sequence[str], n: int):
-    return _row_window(keys, order).rowsBetween(-(n - 1), 0)
 
 
 def atr(df: DataFrame, value_col: str, keys: Sequence[str],
@@ -46,10 +38,10 @@ def atr(df: DataFrame, value_col: str, keys: Sequence[str],
     kernel with alpha=1/n if needed). NULL until ``n`` true ranges fill
     the frame.
     """
-    wrow = _row_window(keys, order)
+    wrow = row_window(keys, order)
     tr = F.abs(F.col(value_col) - F.lag(value_col, 1).over(wrow))
     with_tr = df.withColumn("__tr", tr)
-    w = _frame(keys, order, n)
+    w = row_frame(keys, order, n)
     full = F.count(F.col("__tr")).over(w) >= n
     return with_tr.withColumn(
         "atr", round_portable(F.when(full, F.avg("__tr").over(w)))
@@ -64,14 +56,14 @@ def stochastic(df: DataFrame, value_col: str, keys: Sequence[str],
     rows (NULL when the frame is short or flat), and ``%D`` = ``d_n``-row
     rolling mean of %K. Frame-local min/max/avg — incremental windows.
     """
-    w = _frame(keys, order, n)
+    w = row_frame(keys, order, n)
     full = F.count(F.col(value_col)).over(w) >= n
     lo = F.min(value_col).over(w)
     hi = F.max(value_col).over(w)
     k = F.lit(100.0) * (F.col(value_col) - lo) / F.nullif(
         hi - lo, F.lit(0.0))
     with_k = df.withColumn("__k", F.when(full, k))
-    wd = _frame(keys, order, d_n)
+    wd = row_frame(keys, order, d_n)
     d_full = F.count(F.col("__k")).over(wd) >= d_n
     return (
         with_k.withColumn("stoch_k", round_portable(F.col("__k")))
@@ -91,7 +83,7 @@ def obv(df: DataFrame, price_col: str, volume_col: str,
     and integer accumulation makes the result order-exact on any
     partial-aggregation schedule.
     """
-    wrow = _row_window(keys, order)
+    wrow = row_window(keys, order)
     prev = F.lag(price_col, 1).over(wrow)
     direction = (
         F.when(F.col(price_col) > prev, F.lit(1))
@@ -112,7 +104,7 @@ def log_returns(df: DataFrame, value_col: str, keys: Sequence[str],
     non-positive (sf0.1 events carry value == 0.0 rows), so the math is
     total on real data without ANSI surprises.
     """
-    wrow = _row_window(keys, order)
+    wrow = row_window(keys, order)
     prev = F.lag(value_col, 1).over(wrow)
     pos = (F.col(value_col) > 0) & (prev > 0)
     ret = F.when(pos, F.log(F.col(value_col) / prev))
@@ -133,7 +125,7 @@ def roc(df: DataFrame, value_col: str, keys: Sequence[str],
     """Rate of change (momentum): ``100 * (p / p_{-n} - 1)``. NULL for
     the first ``n`` rows of a key and wherever either price is
     non-positive (total on real data)."""
-    wrow = _row_window(keys, order)
+    wrow = row_window(keys, order)
     prev = F.lag(value_col, n).over(wrow)
     ok = (F.col(value_col) > 0) & (prev > 0)
     out = F.when(ok, F.lit(100.0) * (F.col(value_col) / prev - F.lit(1.0)))
@@ -144,7 +136,7 @@ def donchian(df: DataFrame, value_col: str, keys: Sequence[str],
              order: Sequence[str], n: int = 20) -> DataFrame:
     """Donchian channel: rolling ``n``-row high/low and their midpoint.
     NULL until the frame is full (same warm-up convention as sma)."""
-    w = _frame(keys, order, n)
+    w = row_frame(keys, order, n)
     full = F.count(F.col(value_col)).over(w) >= n
     hi = F.when(full, F.max(value_col).over(w))
     lo = F.when(full, F.min(value_col).over(w))

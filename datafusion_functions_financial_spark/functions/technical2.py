@@ -27,23 +27,15 @@ from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.series import round_portable, round_portable_duck
+from ..plans.series import (
+    round_portable, round_portable_duck, row_frame, row_window,
+)
 from ..sources.tables import load
 
 __all__ = ["williams_r", "cci", "keltner", "vwma", "mfi", "rolling_zscore"]
-
-
-def _row_window(keys: Sequence[str], order: Sequence[str]):
-    return Window.partitionBy(*keys).orderBy(
-        *[F.col(c).asc() for c in order]
-    )
-
-
-def _frame(keys: Sequence[str], order: Sequence[str], n: int):
-    return _row_window(keys, order).rowsBetween(-(n - 1), 0)
 
 
 def williams_r(df: DataFrame, value_col: str, keys: Sequence[str],
@@ -52,7 +44,7 @@ def williams_r(df: DataFrame, value_col: str, keys: Sequence[str],
     ``-100 * (max_n - p) / (max_n - min_n)`` over the last ``n`` rows.
     NULL while the frame is short or flat (the stochastic's mirror:
     %R = %K - 100)."""
-    w = _frame(keys, order, n)
+    w = row_frame(keys, order, n)
     full = F.count(F.col(value_col)).over(w) >= n
     hi = F.max(value_col).over(w)
     lo = F.min(value_col).over(w)
@@ -75,7 +67,7 @@ def cci(df: DataFrame, value_col: str, keys: Sequence[str],
     the fold order is identical in the DuckDB oracle (``list_reduce``),
     making the doubles bit-equal before rounding.
     """
-    w = _frame(keys, order, n)
+    w = row_frame(keys, order, n)
     arr = F.collect_list(F.col(value_col)).over(w)
     with_arr = df.withColumn("__arr", arr)
     # Materialize the mean BEFORE the MAD fold: referencing the mean
@@ -103,10 +95,10 @@ def keltner(df: DataFrame, value_col: str, keys: Sequence[str],
     middle = SMA_n, bands = middle ± mult * ATR_n where ATR is the
     close-to-close true-range rolling mean (``technical.atr``'s
     convention). NULL until both frames are full."""
-    wrow = _row_window(keys, order)
+    wrow = row_window(keys, order)
     tr = F.abs(F.col(value_col) - F.lag(value_col, 1).over(wrow))
     with_tr = df.withColumn("__tr", tr)
-    w = _frame(keys, order, n)
+    w = row_frame(keys, order, n)
     sma_full = F.count(F.col(value_col)).over(w) >= n
     atr_full = F.count(F.col("__tr")).over(w) >= n
     mid = F.when(sma_full, F.avg(value_col).over(w))
@@ -126,7 +118,7 @@ def vwma(df: DataFrame, price_col: str, volume_col: str,
     """Volume-weighted moving average:
     ``sum_n(p * v) / sum_n(v)`` over the last ``n`` rows. NULL until the
     frame is full or when the volume sum is zero."""
-    w = _frame(keys, order, n)
+    w = row_frame(keys, order, n)
     full = F.count(F.col(price_col)).over(w) >= n
     num = F.sum(F.col(price_col) * F.col(volume_col)).over(w)
     den = F.sum(F.col(volume_col)).over(w)
@@ -144,13 +136,13 @@ def mfi(df: DataFrame, price_col: str, volume_col: str,
     ``n`` rows. NULL until the frame is full or when no flow is signed.
     First row of a key has no direction and contributes to neither sum.
     """
-    wrow = _row_window(keys, order)
+    wrow = row_window(keys, order)
     prev = F.lag(price_col, 1).over(wrow)
     flow = F.col(price_col) * F.col(volume_col)
     pos = F.when(F.col(price_col) > prev, flow).otherwise(F.lit(0.0))
     neg = F.when(F.col(price_col) < prev, flow).otherwise(F.lit(0.0))
     with_f = df.withColumn("__pos", pos).withColumn("__neg", neg)
-    w = _frame(keys, order, n)
+    w = row_frame(keys, order, n)
     full = F.count(F.col(price_col)).over(w) >= n
     p_n = F.sum("__pos").over(w)
     n_n = F.sum("__neg").over(w)
@@ -165,7 +157,7 @@ def rolling_zscore(df: DataFrame, value_col: str, keys: Sequence[str],
     """Rolling z-score: ``(p - mean_n) / stddev_samp_n`` over the last
     ``n`` rows. NULL until the frame is full or when the frame is
     flat (zero stddev)."""
-    w = _frame(keys, order, n)
+    w = row_frame(keys, order, n)
     full = F.count(F.col(value_col)).over(w) >= n
     mean = F.avg(value_col).over(w)
     sd = F.stddev_samp(value_col).over(w)

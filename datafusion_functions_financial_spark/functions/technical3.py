@@ -35,24 +35,14 @@ from typing import Sequence
 
 import numpy as np
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
 
-from ..plans.series import round_portable, round_portable_duck
+from ..plans.series import round_portable, round_portable_duck, row_frame
 from ..sources.tables import load
 
 __all__ = ["trix", "ppo", "adx", "aroon"]
-
-
-def _row_window(keys: Sequence[str], order: Sequence[str]):
-    return Window.partitionBy(*keys).orderBy(
-        *[F.col(c).asc() for c in order]
-    )
-
-
-def _frame(keys: Sequence[str], order: Sequence[str], n: int):
-    return _row_window(keys, order).rowsBetween(-(n - 1), 0)
 
 
 def _partitioned(df: DataFrame, value_col: str, keys: Sequence[str],
@@ -241,7 +231,7 @@ def aroon(df: DataFrame, value_col: str, keys: Sequence[str],
     lambdas here entirely. NULL until the frame is full. Pure Catalyst
     — no Python stage.
     """
-    w = _frame(keys, order, n)
+    w = row_frame(keys, order, n)
     nf = float(n)
     staged = (
         df.withColumn("__arr", F.collect_list(F.col(value_col)).over(w))

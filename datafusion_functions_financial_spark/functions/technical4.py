@@ -26,20 +26,14 @@ from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.series import round_portable, round_portable_duck
+from ..plans.series import round_portable, round_portable_duck, row_window
 from ..sources.tables import load
 from .candles import _BARS_CTE, daily_candles
 
 __all__ = ["ichimoku", "pivot_points", "cmo", "stoch_rsi"]
-
-
-def _row_window(keys: Sequence[str], order: Sequence[str]):
-    return Window.partitionBy(*keys).orderBy(
-        *[F.col(c).asc() for c in order]
-    )
 
 
 def ichimoku(df: DataFrame, value_col: str, keys: Sequence[str],
@@ -48,7 +42,7 @@ def ichimoku(df: DataFrame, value_col: str, keys: Sequence[str],
     """Append tenkan/kijun/senkou_a/senkou_b/chikou (NULL until the
     relevant frame fills; senkou lines need a further ``q``-row
     history, chikou a ``q``-row future)."""
-    wrow = _row_window(keys, order)
+    wrow = row_window(keys, order)
 
     def mid(n: int) -> F.Column:
         w = wrow.rowsBetween(-(n - 1), 0)
@@ -84,7 +78,7 @@ def pivot_points(bars: DataFrame, keys: Sequence[str] = ("user_id",),
                  order: Sequence[str] = ("day",)) -> DataFrame:
     """Append pivot/r1/s1/r2/s2 from each bar's PRIOR bar (first bar
     of a key has no priors — NULL)."""
-    wrow = _row_window(keys, order)
+    wrow = row_window(keys, order)
     ph = F.lag("high", 1).over(wrow)
     pl = F.lag("low", 1).over(wrow)
     pc = F.lag("close", 1).over(wrow)
@@ -122,7 +116,7 @@ def cmo(df: DataFrame, value_col: str, keys: Sequence[str],
     frame sums are EXACT BIGINTs (add-order-free at any scale) and
     only the final ratio is a double. NULL until the frame holds ``n``
     changes or when every change in the frame is zero."""
-    wrow = _row_window(keys, order)
+    wrow = row_window(keys, order)
     c = f"CAST(round({value_col} * 100) AS BIGINT)"
     staged = (
         df.withColumn("__c", F.expr(c))
@@ -165,7 +159,7 @@ def stoch_rsi(df: DataFrame, value_col: str, keys: Sequence[str],
     with_rsi = ind.with_indicators(
         df, value_col, list(order), list(keys), [ind.rsi(rsi_n)])
     rsi_col = f"rsi_{rsi_n}"
-    w = _row_window(keys, order).rowsBetween(-(stoch_n - 1), 0)
+    w = row_window(keys, order).rowsBetween(-(stoch_n - 1), 0)
     staged = (
         with_rsi
         .withColumn("__mn", F.min(rsi_col).over(w))

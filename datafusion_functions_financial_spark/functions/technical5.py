@@ -25,10 +25,10 @@ from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.series import round_portable, round_portable_duck
+from ..plans.series import round_portable, round_portable_duck, row_window
 from ..sources.tables import load
 from . import indicators as ind
 from ..plans.indicator_queries import _alpha_sql, _ema_fold_sql
@@ -36,18 +36,12 @@ from ..plans.indicator_queries import _alpha_sql, _ema_fold_sql
 __all__ = ["vortex", "elder_ray", "chandelier_exit", "fractals"]
 
 
-def _row_window(keys: Sequence[str], order: Sequence[str]):
-    return Window.partitionBy(*keys).orderBy(
-        *[F.col(c).asc() for c in order]
-    )
-
-
 def vortex(df: DataFrame, value_col: str, keys: Sequence[str],
            order: Sequence[str], n: int = 14) -> DataFrame:
     """Append vi_plus / vi_minus (NULL until ``n`` deltas fill the
     frame; NULL when the range sum is zero — a flat window has no
     direction)."""
-    wrow = _row_window(keys, order)
+    wrow = row_window(keys, order)
     d = F.col(value_col) - F.lag(value_col, 1).over(wrow)
     staged = (
         df.withColumn("__vp", F.greatest(d, F.lit(0.0)))
@@ -92,7 +86,7 @@ def chandelier_exit(df: DataFrame, value_col: str,
                     n: int = 22, k: float = 3.0) -> DataFrame:
     """Append chandelier_long = maxₙ(p) − k·ATRₙ (close-to-close ATR;
     NULL until ``n`` deltas fill the frame)."""
-    wrow = _row_window(keys, order)
+    wrow = row_window(keys, order)
     tr = F.abs(F.col(value_col) - F.lag(value_col, 1).over(wrow))
     staged = df.withColumn("__tr", tr)
     w = wrow.rowsBetween(-(n - 1), 0)
@@ -111,7 +105,7 @@ def fractals(df: DataFrame, value_col: str, keys: Sequence[str],
     """Append is_fractal_high / is_fractal_low: strict 5-point local
     extremum flags (0 at series edges — a fractal needs two neighbors
     on each side)."""
-    wrow = _row_window(keys, order)
+    wrow = row_window(keys, order)
     p = F.col(value_col)
     l1, l2 = F.lag(p, 1).over(wrow), F.lag(p, 2).over(wrow)
     f1, f2 = F.lead(p, 1).over(wrow), F.lead(p, 2).over(wrow)

@@ -149,9 +149,5 @@ FROM lineitem l JOIN b USING (l_returnflag)
 QUERIES: dict = {
     "quality_percentile_filter_documents":
         (_q_percentile_filter, _ORACLE_PERCENTILE_FILTER),
-}
-
-# Registered via the registry's r04-queue tail.
-QUEUED_QUERIES: dict = {
     "quality_winsorize_lineitem": (_q_winsorize, _ORACLE_WINSORIZE),
 }

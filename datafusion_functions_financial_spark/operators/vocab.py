@@ -268,10 +268,5 @@ QUERIES: dict = {
     "vocab_top_tokens_documents": (_q_top_tokens, _ORACLE_TOP_TOKENS),
     "vocab_stats_documents": (_q_vocab_stats, _ORACLE_VOCAB_STATS),
     "vocab_bpe_pairs_documents": (_q_bpe_pairs, _ORACLE_BPE_PAIRS),
-}
-
-# Registered via the registry's r04-queue tail (keeping this module's
-# two r03-windowed queries at their gate positions).
-QUEUED_QUERIES: dict = {
     "vocab_remove_stopwords_documents": (_q_stopwords, _ORACLE_STOPWORDS),
 }

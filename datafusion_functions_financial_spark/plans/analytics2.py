@@ -548,10 +548,5 @@ QUERIES: dict = {
     "q_session_stats_events": (_q_session_stats, _ORACLE_SESSION_STATS),
     "q_topk_events_per_user": (_q_topk_user, _ORACLE_TOPK_USER),
     "q_orders_above_cust_avg": (_q_above_avg, _ORACLE_ABOVE_AVG),
-}
-
-# Registered past the gate window via the registry's _queued shim (the
-# r04 window is full); lands in the R05 gate.
-QUEUED_QUERIES: dict = {
     "q_yoy_growth_orders": (_q_yoy, _ORACLE_YOY),
 }

@@ -270,8 +270,7 @@ PR_ITERS = 3
 
 def pagerank_edges(edges: DataFrame, nodes: DataFrame,
                    n_nodes: int, iters: int = PR_ITERS,
-                   d: float = PR_D,
-                   out_weight_shape: str = "aggregate") -> DataFrame:
+                   d: float = PR_D) -> DataFrame:
     """(node, pagerank): ``iters`` power iterations of PageRank over
     a weighted edge list ``(src, dst, w)``, starting uniform.
 
@@ -287,27 +286,11 @@ def pagerank_edges(edges: DataFrame, nodes: DataFrame,
     if d != PR_D:
         raise ValueError("damping is fixed at 85/100 (exact-ratio "
                          "double literals keep engine parity)")
-    # Out-weight shape (VERDICT r13 item 3). Both shapes produce the
-    # identical BIGINT total per src (integer sums are order-free):
-    #
-    # - "aggregate" (default): sum(w) per src via a map-side-combinable
-    #   aggregate, broadcast-joined back. Scale-safe under hub skew —
-    #   a src owning 10^9 edges partially aggregates on every map task
-    #   instead of sorting one giant window group on one reducer.
-    # - "window": SUM(w) OVER (PARTITION BY src), keeping the edge
-    #   relation ONE subplan shape. Tried in r13 for exchange reuse;
-    #   the r14 A/B measured no reuse firing at runtime (AQE-on plans
-    #   never show ReusedExchange on this setup — OPTIMIZATION_r13.md
-    #   empirical note) and no wall win, so the skew-safe aggregate is
-    #   the default again; the window variant stays for the A/B.
-    if out_weight_shape == "window":
-        e = edges.withColumn(
-            "__ow", F.expr("sum(w) OVER (PARTITION BY src)"))
-    elif out_weight_shape == "aggregate":
-        out_w = edges.groupBy("src").agg(F.sum("w").alias("__ow"))
-        e = edges.join(F.broadcast(out_w), "src")
-    else:
-        raise ValueError(f"unknown out_weight_shape {out_weight_shape!r}")
+    # Out-weight per src via a map-side-combinable aggregate,
+    # broadcast-joined back: a hub src owning most edges partially
+    # aggregates on every map task instead of landing on one reducer.
+    out_w = edges.groupBy("src").agg(F.sum("w").alias("__ow"))
+    e = edges.join(F.broadcast(out_w), "src")
     # Damping constants as integer-ratio doubles (correctly-rounded
     # division of exact integers — identical on every engine), never
     # Python float literals reprinted into SQL.

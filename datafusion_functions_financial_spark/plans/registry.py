@@ -1,285 +1,76 @@
 """Aggregated registry of all declared query/oracle pairs.
 
 Each entry maps a query name to ``(spark_fn, oracle_sql_or_None)``.
+A query module registers its pairs by defining ``QUERIES``, nothing
+else: the registry discovers every such module under ``functions/``,
+``operators/`` and ``plans/`` (sorted by name, ``_``-prefixed modules
+skipped).
 ``__spark_entry__.py`` re-exports this for the driver; the test suite
 runs every pair against DuckDB at sf0.001 so the driver's sf0.01 gate
 is pre-validated locally.
+
+The CORRECTNESS gate records rows for the first ``GATE_WINDOW``
+entries in registry order only. Which pairs fill that window is
+decided by the generated ``plans/_window.py`` (see
+``tools/gen_window.py`` and COVERAGE.md §"Gate rotation"), which
+``_collect`` moves to the front; the order of the remaining names
+carries no meaning.
 """
 
 from __future__ import annotations
 
-from . import (
-    analytics, analytics2, analytics3, analytics4, analytics5, analytics6,
-    analytics7, analytics8, analytics9, analytics10,
-    enrich,
-    funnel, indicator_queries,
-    portfolio, sequences, signals, validate,
-)
-from ..functions import (
-    forecast2,
-    barvol, candles, forecast, resample, risk, risk2, rollstats,
-    rollstats2,
-    technical, technical2, technical3, technical4, technical5, technical6,
-    technical7,
-)
+import importlib
+import pkgutil
+
 from ._gated import DRIVER_GREEN
 
-# ADVICE r12: tools/gen_window.py imports this module to read
-# _collect_unordered(); if its own output (_window.py) is missing or
-# syntactically broken — exactly when regeneration is needed — the
-# import would fail before the generator could run. Fall back to an
-# empty window so the generator (and plain registry reads) still work;
-# the rotation test fails loudly on a genuinely missing window.
+# tools/gen_window.py imports this module to read _collect_unordered();
+# if its own output (_window.py) is missing or syntactically broken —
+# exactly when regeneration is needed — the import would fail before
+# the generator could run. Fall back to an empty window so the
+# generator (and plain registry reads) still work; the rotation test
+# fails loudly on a genuinely missing window.
 try:
     from ._window import REGATE_WINDOW
 except Exception:  # missing/broken generated file — regenerate it
     REGATE_WINDOW = ()
-from ..operators import (
-    countfit, embeval2, experiment2, ivfeval, spectral2,
-    abtest, anomaly2, anomaly3, asof, binseg, blocking, bm25,
-    boilerplate, bootstrap, cc,
-    chunking,
-    concentration, concentration2, corrmatrix, cosinedup, cuped,
-    crossmodal,
-    decontam, dedup, diff, digest, divergence, drift2, gof,
-    dq, dq2, dq3, dq4, dq5, dq6, embdim, embgeo, embgeo2, embnorm,
-    embpca,
-    embproj,
-    embstats,
-    embclf, embstats2, embeval,
-    graph2, graph3, graph4, graph5, graph6, graph7, graph8,
-    histogram,
-    forecast3,
-    incremental, inequality, interval, ivf, kcenter, keywords, kmeans,
-    linkage, markov2, microstructure, micro4, mlmetrics, mlmetrics2,
-    mlmetrics3, mlmetrics4, mlmetrics5, mmd,
-    multimodal,
-    micro2, micro3, micro5, outliers, packing, pipeline, ppjoin,
-    ppjoin2,
-    profile, qsketch,
-    quality,
-    qnorm, quantile2, quantile3, quantize, rfm,
-    risk3, risk4,
-    robustfit, rollup, sampling, sampling2, sampling3, sampling4,
-    sampling5,
-    simpson,
-    spectral, stats2, survival2, survival3, survival4, tsa2,
-    stats3, stats4, stats5, stats6, stats7, stats8, stats9, stats10,
-    stats11, stats12, stats13, stats14, stats15, stats16, stats17,
-    stats18, stats19, stats20, stats21, strsim,
-    similarity, sketch, sketch2, sketch3, sketch4, skew, survival,
-    text, uplift,
-    text2,
-    text3,
-    text4, text5, text6, text7, text8, text9, text10, text11,
-    tfidf,
-    vocab, vocab2,
-    wquantile,
-)
 
-
-def _queued(qdict: dict):
-    """Registry shim: a bare holder for a query dict, used to place a
-    subset of a module's queries at a registry position independent of
-    the module's own slot (gate-window rotation)."""
-
-    class _Q:
-        QUERIES = qdict
-
-    return _Q
-
-
-def _pick(module, *names):
-    """Shim holding only ``names`` from ``module.QUERIES`` — pair with
-    a ``_rest`` of the same module so each query registers once."""
-    return _queued({n: module.QUERIES[n] for n in names})
-
-
-def _rest(module, *names):
-    """Shim holding ``module.QUERIES`` minus ``names``."""
-    return _queued({n: p for n, p in module.QUERIES.items()
-                    if n not in names})
-
-
-_QueuedAnalytics2 = _queued(analytics2.QUEUED_QUERIES)
-_QueuedCandles = _queued(candles.QUEUED_QUERIES)
-_QueuedVocab = _queued(vocab.QUEUED_QUERIES)
-_QueuedMicro = _queued(microstructure.QUEUED_QUERIES)
-_QueuedDedup = _queued(dedup.QUEUED_QUERIES)
-_QueuedQuality = _queued(quality.QUEUED_QUERIES)
-
-# r06 window picks: mixed modules (some queries already driver-green)
-# contribute ONLY their ungated queries to the window; the green
-# remainder re-registers via the matching ``_rest`` shims below.
-_PickAsofR06 = _pick(asof, "asof_events_snapshots_tol",
-                     "asof_events_snapshots_nearest")
-_RestAsofR06 = _rest(asof, "asof_events_snapshots_tol",
-                     "asof_events_snapshots_nearest")
-_PickDedupCS = _pick(dedup, "dedup_cluster_sizes_documents")
-_RestDedupCS = _rest(dedup, "dedup_cluster_sizes_documents",
-                     "dedup_jaccard_hist_documents")
-
-# The driver's CORRECTNESS gate records rows for the FIRST ``GATE_WINDOW``
-# registry entries only (observed in rounds 1-3: CORRECTNESS_r0N is
-# exactly the first 50 names in iteration order). Registry order is
-# therefore a coverage decision, not an aesthetic one: modules whose
-# queries have never received a driver CORRECTNESS row come FIRST, and
-# long-green modules rotate out of the window (the local parity suite,
-# ``tests/test_oracle_parity.py``, keeps running ALL pairs every round).
-# The rotation plan is documented in COVERAGE.md §"Gate rotation";
-# ``tests/test_registry_rotation.py`` enforces that every not-yet-gated
-# query sits inside the window.
 GATE_WINDOW = 50
 
-# Queries with a green driver CORRECTNESS row in a prior round:
-# DERIVED from the CORRECTNESS_r*.json files themselves (latest row
-# per name must be fully green) — regenerate with
-# ``python tools/gen_gated.py`` after each round's file lands
-# (VERDICT r08 item 7: the set was hand-maintained through r08; a
-# typo could silently re-gate or orphan a pair).
+# Queries with a green CORRECTNESS gate row in a prior round, derived
+# from the CORRECTNESS_r*.json files by ``python tools/gen_gated.py``.
 PRIOR_GATED = DRIVER_GREEN
 
-
-_PickSkewR07 = _pick(skew, "dq_key_skew_lineitem")
-_RestSkewR07 = _rest(skew, "dq_key_skew_lineitem")
-
-# sampling3 sits inside the frozen r07 window; its late ESS addition
-# must register PAST the window (r08 queue) without moving the two
-# window entries.
-_PickSampling3R07 = _pick(sampling3, "sample_systematic_orders",
-                          "sample_neyman_orders")
-_RestSampling3R07 = _rest(sampling3, "sample_systematic_orders",
-                          "sample_neyman_orders")
-
-# r08 window picks: mixed modules contribute ONLY their ungated query
-# to the window; the already-green remainder re-registers via the
-# matching ``_rest`` shims below.
-_PickEmbpcaR08 = _pick(embpca, "emb_pca2_power_embeddings")
-_RestEmbpcaR08 = _rest(embpca, "emb_pca2_power_embeddings")
-_PickForecastR08 = _pick(forecast, "q_theta_forecast_events")
-_RestForecastR08 = _rest(forecast, "q_theta_forecast_events")
-_PickVocabR08 = _pick(vocab, "vocab_bpe_pairs_documents")
-_RestVocabR08 = _rest(vocab, "vocab_bpe_pairs_documents")
-# dedup_jaccard_hist lives in dedup.QUERIES (appended late-r07); it
-# gates in r08 while the rest of dedup stays split by the r06 shims —
-# _RestDedupCS below therefore excludes it too.
-_PickJaccHistR08 = _pick(dedup, "dedup_jaccard_hist_documents")
-# mlmetrics: 5 of 7 gate in r08; WoE/IV and the stump split stay in
-# the r09 queue (the window holds exactly 50).
-_PickMlmR08 = _pick(mlmetrics, "q_auc_events", "q_calibration_events",
-                    "q_gains_lift_events", "q_threshold_metrics_events",
-                    "q_bh_fdr_events")
-_RestMlmR08 = _rest(mlmetrics, "q_auc_events", "q_calibration_events",
-                    "q_gains_lift_events", "q_threshold_metrics_events",
-                    "q_bh_fdr_events")
-
-# analytics10 sits inside the frozen r09 window; its late Q6 addition
-# (q_forecast_revenue_lineitem) must register PAST the window (r10
-# queue) without moving the 8 window entries.
-_A10_WINDOW = ("q_min_price_suppliers_parts", "q_priority_late_orders",
-               "q_profit_nation_year", "q_important_parts_lineitem",
-               "q_late_lines_by_status", "q_disjunctive_revenue_parts",
-               "q_excess_qty_suppliers", "q_waiting_suppliers")
-_PickA10R09 = _pick(analytics10, *_A10_WINDOW)
-_RestA10R09 = _rest(analytics10, *_A10_WINDOW)
-
-# r11 re-gate picks (VERDICT r10 item 1: the 41-pair queue fills 41 of
-# the 50 window slots; the 9 spare slots re-gate the reference-parity
-# headline set so the driver re-verifies the core surface this round).
-_IND_REGATE = ("ind_sma_native_events", "ind_ema_events",
-               "ind_rsi_events", "ind_macd_events",
-               "ind_combined_events")
-_PickIndR11 = _pick(indicator_queries, *_IND_REGATE)
-_RestIndR11 = _rest(indicator_queries, *_IND_REGATE)
-_SIG_REGATE = ("signals_rsi_events", "signals_ma_crossover_events")
-_PickSigR11 = _pick(signals, *_SIG_REGATE)
-_RestSigR11 = _rest(signals, *_SIG_REGATE)
-_PickValR11 = _pick(validate, "validate_lineitem_values")
-_RestValR11 = _rest(validate, "validate_lineitem_values")
-_PickAnaR11 = _pick(analytics, "q_pricing_summary_lineitem")
-_RestAnaR11 = _rest(analytics, "q_pricing_summary_lineitem")
-
-_MODULES = [
-    # --- r11 must-gate block: the 41-pair r10 queue first (VERDICT
-    # r10 item 1) — every one verified value-exact at sf0.001 +
-    # sf0.01 + sf0.1 through tools/verify_driver_contract on landing
-    # and independently sampled by the r10 judge. ---
-    embeval2, technical7, stats17, risk4, graph8, tsa2, mlmetrics5,
-    stats18, survival3, stats19, embdim, qnorm, stats20,
-    uplift, survival4, stats21, drift2, gof, forecast3, dq6,
-    embclf, text11,
-    # --- 9 re-gate slots: the reference-parity headline set, so the
-    # driver re-verifies the core surface (and the ADVICE-driven
-    # semantic fixes in survival3/stats18/dq6 land with fresh rows
-    # alongside them in the same window). ---
-    _PickIndR11, _PickSigR11, _PickValR11, _PickAnaR11,
-    # --- past the window: the r10 window block (all green in
-    # CORRECTNESS_r10), then r09, r08, r07, older. ---
-    stats10, text9, graph5, embgeo2,
-    sampling4, stats11, graph6, concentration2, _RestA10R09,
-    mlmetrics3, vocab2,
-    ppjoin2, stats12, graph7, mlmetrics4, dq5, stats13, stats14,
-    embeval, text10, sampling5, survival2, spectral2, experiment2,
-    countfit, stats15, stats16, forecast2, ivfeval, risk3,
-    _RestMlmR08, stats6, stats7, mmd, stats8, _RestSampling3R07,
-    simpson, binseg, cuped, abtest, graph4, text7, text8, markov2,
-    analytics9, ppjoin,
-    _PickA10R09, mlmetrics2, stats9, inequality,
-    # --- everything driver-green in r01-r08
-    # (PRIOR_GATED is derived from the CORRECTNESS files; the local
-    # parity suite keeps running ALL pairs every round). r08 window
-    # modules first, then r07, then older. ---
-    stats4, embproj, anomaly3, survival, bootstrap, text5, blocking,
-    risk2, micro5, graph3, text6, dq4, analytics8,
-    _PickEmbpcaR08, _PickForecastR08, _PickVocabR08, _PickJaccHistR08,
-    _PickMlmR08, digest, stats5, kmeans, sketch4, corrmatrix,
-    cosinedup, kcenter, quantile3,
-    # r07 window modules, all green in CORRECTNESS_r07.
-    stats2, spectral, micro3, graph2, quantile2, analytics7,
-    _PickSkewR07,
-    cc, qsketch, stats3, micro4, text4, dq3, _PickSampling3R07, embgeo,
-    # older green modules.
-    analytics4, technical5, robustfit, rfm, _RestEmbpcaR08, dq2,
-    sequences,
-    _RestForecastR08, sketch3, analytics5, embstats2, interval,
-    _PickAsofR06, _PickDedupCS,
-    analytics6, sampling2, text3, anomaly2, micro2, technical6,
-    _RestAsofR06, _RestDedupCS, _RestSkewR07,
-    wquantile, diff, _QueuedAnalytics2, risk,
-    technical3, technical4, sketch2, barvol, dq, analytics3,
-    keywords, portfolio, linkage, crossmodal, _QueuedCandles,
-    concentration, outliers, strsim,
-    embstats, text, microstructure, sketch,
-    profile, _QueuedVocab, embnorm, _QueuedMicro, _QueuedDedup,
-    _QueuedQuality, funnel, rollstats,
-    technical2, rollstats2, analytics2, text2, candles, resample,
-    _RestIndR11, _RestAnaR11, _RestSigR11, _RestValR11, ivf, pipeline,
-    similarity,
-    sampling, multimodal, rollup, decontam,
-    incremental, tfidf, quantize, boilerplate, bm25,
-    packing, divergence,
-    technical, chunking, _RestVocabR08, histogram, quality, enrich,
-]
-
-# Queries registered past the gate window, scheduled for the NEXT
-# round's gate. The r11 window absorbed the entire 41-pair r10 queue
-# (plus 9 headline re-gate slots); per VERDICT r10 item 8 ("queue
-# discipline"), no new operator families land until this window has
-# rotated through a driver gate, so the queue is empty.
+# Queries registered past the gate window, scheduled for the next
+# round's gate (none: every pair already has a green gate row).
 NEXT_ROUND_QUEUE: frozenset = frozenset()
 
-# Backwards-compatible aliases (earlier rounds referred to the queue
-# by round number; R07 is the round any queued queries would gate in).
-R07_QUEUE = NEXT_ROUND_QUEUE
-R06_QUEUE = NEXT_ROUND_QUEUE
+_PACKAGES = ("functions", "operators", "plans")
+
+
+def _query_modules() -> list:
+    """Every non-private module under ``_PACKAGES`` that defines
+    ``QUERIES``, in (package, module name) order."""
+    root = __name__.rsplit(".", 2)[0]
+    found = []
+    for pkg_name in _PACKAGES:
+        pkg = importlib.import_module(f"{root}.{pkg_name}")
+        for info in sorted(pkgutil.iter_modules(pkg.__path__),
+                           key=lambda i: i.name):
+            if info.name.startswith("_"):
+                continue
+            mod = importlib.import_module(f"{pkg.__name__}.{info.name}")
+            if hasattr(mod, "QUERIES"):
+                found.append(mod)
+    return found
 
 
 def _collect_unordered() -> dict:
-    """Registry pairs in _MODULES iteration order, BEFORE the gate-
-    window reorder (tools/gen_window.py reads this to plan the
-    rotation without a circular dependency)."""
+    """Registry pairs in discovery order, BEFORE the gate-window
+    reorder (tools/gen_window.py reads this to plan the rotation
+    without a circular dependency)."""
     out: dict = {}
-    for m in _MODULES:
+    for m in _query_modules():
         for name, pair in m.QUERIES.items():
             if name in out:
                 raise ValueError(f"duplicate query name: {name}")
@@ -288,16 +79,7 @@ def _collect_unordered() -> dict:
 
 
 def _collect() -> dict:
-    """Registry pairs with the generated re-gate window fronted.
-
-    Steady-state rotation (VERDICT r11 item 3): with every registered
-    pair driver-green, the gate window re-verifies the 50 pairs whose
-    latest green CORRECTNESS row is oldest (plus, with priority, any
-    ungated/regressed pair). The window lives in the generated
-    ``plans/_window.py`` — regenerate with ``tools/gen_gated.py &&
-    tools/gen_window.py`` after each round's CORRECTNESS file lands;
-    hand-ordering _MODULES per round (the <= r11 mechanism) is gone.
-    """
+    """Registry pairs with the generated re-gate window fronted."""
     out = _collect_unordered()
     front = {n: out[n] for n in REGATE_WINDOW if n in out}
     if not front:

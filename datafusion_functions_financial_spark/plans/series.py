@@ -11,8 +11,9 @@ written with identical floating-point expression trees on both sides
 from __future__ import annotations
 
 from dataclasses import dataclass
+from typing import Sequence
 
-from pyspark.sql import Column
+from pyspark.sql import Column, Window, WindowSpec
 from pyspark.sql import functions as F
 
 ROUND_DP = 4
@@ -43,6 +44,18 @@ def round_portable(col: Column, dp: int = ROUND_DP) -> Column:
 def round_portable_duck(expr: str, dp: int = ROUND_DP) -> str:
     scale = float(10 ** dp)
     return f"round(({expr}) * {scale}) / {scale} + 0.0"
+
+
+def row_window(keys: Sequence[str], order: Sequence[str]) -> WindowSpec:
+    """Window partitioned by ``keys``, ordered ascending by ``order``."""
+    return Window.partitionBy(*keys).orderBy(
+        *[F.col(c).asc() for c in order])
+
+
+def row_frame(keys: Sequence[str], order: Sequence[str],
+              n: int) -> WindowSpec:
+    """The last ``n`` rows (current row included) of ``row_window``."""
+    return row_window(keys, order).rowsBetween(-(n - 1), 0)
 
 
 @dataclass(frozen=True)

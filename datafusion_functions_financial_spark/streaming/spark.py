@@ -121,22 +121,24 @@ def streaming_indicators(
         row = state.get if state.exists else None
         eng = _restore(symbol, window_size, seed_mode, row)
         out_rows = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values("timestamp", kind="mergesort")
-            for rec in pdf.itertuples(index=False):
-                values = eng.update(MarketTick(
-                    symbol=symbol,
-                    timestamp=rec.timestamp,
-                    price=float(rec.price),
-                    volume=int(rec.volume),
-                    bid=getattr(rec, "bid", None),
-                    ask=getattr(rec, "ask", None),
-                ))
-                out_rows.append((
-                    symbol, rec.timestamp, values.price, values.volume,
-                    values.sma, values.ema, values.rsi, values.volume_sma,
-                    values.volume_ratio,
-                ))
+        # A group larger than arrow.maxRecordsPerBatch arrives in several
+        # chunks: order the whole group, not each chunk.
+        pdf = pd.concat(list(pdfs), ignore_index=True).sort_values(
+            "timestamp", kind="mergesort")
+        for rec in pdf.itertuples(index=False):
+            values = eng.update(MarketTick(
+                symbol=symbol,
+                timestamp=rec.timestamp,
+                price=float(rec.price),
+                volume=int(rec.volume),
+                bid=getattr(rec, "bid", None),
+                ask=getattr(rec, "ask", None),
+            ))
+            out_rows.append((
+                symbol, rec.timestamp, values.price, values.volume,
+                values.sma, values.ema, values.rsi, values.volume_sma,
+                values.volume_ratio,
+            ))
         state.update(_persist(eng))
         yield pd.DataFrame(out_rows, columns=[f.name for f in
                                               ENRICHED_SCHEMA.fields])

@@ -178,35 +178,51 @@ def test_spark_streaming_matches_engine(spark, tmp_path):
     ])
     src = tmp_path / "ticks"
     spark.createDataFrame(pdf, schema=TICK_SCHEMA).write.parquet(str(src))
+    # Second input: one file in descending timestamp order, read in Arrow
+    # chunks of 3 rows, so each symbol's group in the single micro-batch
+    # spans several chunks that must be ordered together.
+    src_desc = tmp_path / "ticks_desc"
+    (spark.createDataFrame(pdf.iloc[::-1], schema=TICK_SCHEMA)
+     .coalesce(1).write.parquet(str(src_desc)))
 
-    stream = spark.readStream.schema(TICK_SCHEMA).parquet(str(src))
-    enriched = streaming_indicators(stream, window_size=3)
-    q = (
-        enriched.writeStream.format("memory")
-        .queryName("enriched_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r["symbol"], r["timestamp"]): r
-        for r in spark.sql("SELECT * FROM enriched_test").collect()
-    }
-    assert len(got) == len(ticks)
+    chunk_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    default_chunk = spark.conf.get(chunk_key)
+    for path, chunk_rows in ((src, default_chunk), (src_desc, "3")):
+        spark.conf.set(chunk_key, chunk_rows)
+        try:
+            stream = spark.readStream.schema(TICK_SCHEMA).parquet(str(path))
+            enriched = streaming_indicators(stream, window_size=3)
+            q = (
+                enriched.writeStream.format("memory")
+                .queryName(f"enriched_{path.name}")
+                .outputMode("append")
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination(120)
+        finally:
+            spark.conf.set(chunk_key, default_chunk)
+        got = {
+            (r["symbol"], r["timestamp"]): r
+            for r in spark.sql(f"SELECT * FROM enriched_{path.name}").collect()
+        }
+        assert len(got) == len(ticks)
 
-    for symbol, prices in (("A", prices_a), ("B", prices_b)):
-        eng = StreamingIndicators(symbol, 3)
-        sym_ticks = [t for t in ticks if t.symbol == symbol]
-        for t in sym_ticks:
-            exp = eng.update(t)
-            row = got[(symbol, t.timestamp)]
-            for f in ("sma", "ema", "rsi", "volume_sma", "volume_ratio"):
-                e, g = getattr(exp, f), row[f]
-                if e is None:
-                    assert g is None or (isinstance(g, float) and math.isnan(g))
-                else:
-                    assert g == pytest.approx(e, abs=1e-9), (symbol, t, f)
+        for symbol in ("A", "B"):
+            eng = StreamingIndicators(symbol, 3)
+            for t in (t for t in ticks if t.symbol == symbol):
+                exp = eng.update(t)
+                row = got[(symbol, t.timestamp)]
+                for f in ("sma", "ema", "rsi", "volume_sma",
+                          "volume_ratio"):
+                    e, g = getattr(exp, f), row[f]
+                    if e is None:
+                        assert g is None or (isinstance(g, float)
+                                             and math.isnan(g)), (
+                            path.name, symbol, t, f)
+                    else:
+                        assert g == pytest.approx(e, abs=1e-9), (
+                            path.name, symbol, t, f)
 
 
 @pytest.mark.slow

@@ -1,22 +1,14 @@
-"""Gate-rotation planner: turn a round's CORRECTNESS_r{N}.json into
-the next round's registry edits.
-
-Prints (a) the names to append to ``registry.PRIOR_GATED`` (this
-round's green rows), (b) any red rows (keep them gated next round so
-the fix re-gates), and (c) the still-ungated queries that must lead
-the next window (current R05_QUEUE members plus anything else without
-a prior CORRECTNESS row).
+"""Gate-rotation check: every registered query must have a green
+CORRECTNESS row from a prior round, sit inside the current gate window,
+or be queued for the next round. The window itself is generated by
+``tools/gen_window.py``.
 
 Usage:
-    python tools/plan_rotation.py CORRECTNESS_r04.json
-    python tools/plan_rotation.py --check   # CI mode: exit 1 when any
-        # query lands outside both the gate window and the next-round
-        # queue (rotation mistake); no CORRECTNESS file needed.
+    python tools/plan_rotation.py --check   # exit 1 on any violation
 """
 
 from __future__ import annotations
 
-import json
 import sys
 
 sys.path.insert(0, ".")
@@ -50,44 +42,5 @@ def check() -> int:
     return len(lost)
 
 
-def main() -> int:
-    if len(sys.argv) > 1 and sys.argv[1] == "--check":
-        return 1 if check() else 0
-    path = sys.argv[1] if len(sys.argv) > 1 else "CORRECTNESS_r04.json"
-    rows = json.load(open(path))
-
-    from datafusion_functions_financial_spark.plans import registry
-
-    green = sorted(
-        n for n, r in rows.items()
-        if r.get("rows_match") and r.get("schema_match")
-        and r.get("hash_match")
-    )
-    red = sorted(set(rows) - set(green))
-    gated_after = registry.PRIOR_GATED | set(green)
-    ungated = sorted(
-        n for n in registry.all_queries() if n not in gated_after
-    )
-
-    print(f"# {path}: {len(green)} green, {len(red)} red")
-    print("\n# Append to PRIOR_GATED:")
-    for n in green:
-        if n not in registry.PRIOR_GATED:
-            print(f'    "{n}",')
-    if red:
-        print("\n# RED rows — diagnose, fix, keep in next window:")
-        for n in red:
-            print(f"    {n}: {rows[n]}")
-    print(f"\n# Still ungated ({len(ungated)}) — must lead the next "
-          f"window (or sit in the next queue):")
-    for n in ungated:
-        print(f"    {n}")
-    win = registry.gate_window_names()
-    missing = [n for n in ungated if n not in win and n not in red]
-    print(f"\n# Of those, NOT in the current first-{registry.GATE_WINDOW}"
-          f" window: {len(missing)} (reorder _MODULES so they lead)")
-    return 0
-
-
 if __name__ == "__main__":
-    raise SystemExit(main())
+    raise SystemExit(1 if check() else 0)
