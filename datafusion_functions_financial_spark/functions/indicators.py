@@ -9,11 +9,8 @@ cannot express these recursive scans, so the idiomatic mapping is:
   ``count`` (pure Catalyst, whole-stage codegen, no Python). Exact
   whenever the value column has no NULLs (the null-skipping reference
   semantics only diverge on NULL inputs).
-- **Exact path for all four** — one ``groupBy(partition).applyInPandas``
-  pass that sorts each group by the order columns and appends every
-  requested indicator column using the pure-pandas kernels. Arrow
-  batches both directions; one shuffle total no matter how many
-  indicators are requested.
+- **Exact path for all four** — one ``plans.series.fold_series`` pass
+  that appends every requested indicator column; one shuffle total.
 
 Scale notes (100 TB):
 - The only shuffle is the groupBy on the partition keys; all
@@ -31,12 +28,14 @@ import warnings
 from dataclasses import dataclass
 from typing import Iterable, Sequence
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
 
+from ..plans.series import fold_series
 from . import kernels
 from .kernels import ema_kernel, macd_kernel, rsi_kernel, sma_kernel
 
@@ -111,13 +110,9 @@ def with_indicators(
 
     ``method``:
 
-    - ``"partition"`` (default): shuffle on the keys, sort within
-      partitions JVM-side, then ONE ``mapInPandas`` pass per shuffle
-      partition that detects group boundaries and runs the kernels on
-      numpy slices. Amortizes the Arrow/pandas round-trip over all
-      groups in a partition (thousands of tiny series per Python call
-      instead of one call per series). Memory: O(shuffle partition) in
-      the Python worker — size partitions accordingly.
+    - ``"partition"`` (default): one ``plans.series.fold_series`` pass —
+      every series of a shuffle partition folded in one Python call.
+      Memory: O(shuffle partition) in the Python worker.
     - ``"group"``: classic ``groupBy().applyInPandas`` — one call per
       series; memory O(series); better for few huge series.
 
@@ -190,81 +185,43 @@ def with_indicators(
     if method != "partition":
         raise ValueError("method must be 'partition' or 'group'")
 
-    import numpy as np
+    value_cols = list(dict.fromkeys(s.value_col or value_col for s in specs))
 
-    def compute_partition(batches):
-        pdfs = list(batches)
-        if not pdfs:
-            return
-        pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
-        if len(pdf) == 0:
-            return
-        # Rows arrive sorted by (keys..., order...); find group bounds.
-        # Null-safe compare: pandas NaN != NaN is True, so a plain
-        # keys.ne(shift) would start a new group on EVERY null-keyed row,
-        # silently resetting indicators (groupBy treats nulls as one
-        # group — this path must agree with method='group').
-        keys = pdf[partition_by]
-        shifted = keys.shift()
-        changed = (
-            (keys.ne(shifted) & ~(keys.isna() & shifted.isna()))
-            .any(axis=1)
-            .to_numpy()
-        )
-        changed[0] = True
-        starts = np.flatnonzero(changed)
-        ends = np.append(starts[1:], len(pdf))
-        value_arrays = {
-            c: pdf[c].to_numpy(dtype="float64", na_value=np.nan)
-            for c in {s.value_col or value_col for s in specs}
-        }
-        outs = {s.out_col: np.full(len(pdf), np.nan) for s in specs}
-        # Pack each value column's non-null runs once: (G, maxlen)
-        # NaN-padded matrix + global row positions per series. The
-        # recursive kernels then run PARALLEL ACROSS SERIES (one
-        # vectorized step per time index — see kernels.*_fold2d)
-        # instead of a Python loop per series; expression trees per
-        # element are unchanged, so results stay bit-identical.
-        packed = {}
-        for c, arr in value_arrays.items():
-            nn = ~np.isnan(arr)
-            idx_segs = [
-                st + np.flatnonzero(nn[st:en])
-                for st, en in zip(starts, ends)
-            ]
-            M, lens = kernels.pack_segments([arr[ix] for ix in idx_segs])
-            packed[c] = (M, lens, idx_segs)
-
-        def scatter(out_arr, R, idx_segs):
-            for g, ix in enumerate(idx_segs):
-                out_arr[ix] = R[g, : ix.shape[0]]
-
+    def fold(mats, lens):
+        # Null-skipping: each series' non-null values fold as one
+        # compressed series and the results land back on their rows
+        # (NaN pad cells past a series' end are skipped the same way).
+        # The fold2d kernels keep each element's expression tree, so the
+        # results match method="group" bit for bit.
+        nonnull = {}
+        for c, M in mats.items():
+            idx = [np.flatnonzero(~np.isnan(row)) for row in M]
+            C, clens = kernels.pack_segments(
+                [row[ix] for row, ix in zip(M, idx)])
+            nonnull[c] = (C, clens, idx)
+        outs = {}
         for s in specs:
-            M, lens, idx_segs = packed[s.value_col or value_col]
-            if s.kind == "ema":
-                R = kernels.ema_fold2d(M, 2.0 / (float(s.window) + 1.0))
-            elif s.kind == "macd":
-                R = (kernels.ema_fold2d(M, 2.0 / 13.0)
-                     - kernels.ema_fold2d(M, 2.0 / 27.0))
-            elif s.kind == "rsi":
-                R = kernels.rsi_fold2d(M, lens, s.window)
-            else:  # sma: per-segment sliding windows, already vector
-                arr = value_arrays[s.value_col or value_col]
-                for st, en in zip(starts, ends):
-                    outs[s.out_col][st:en] = _KERNELS[s.kind](
-                        arr[st:en], s
-                    )
+            M = mats[s.value_col or value_col]
+            if s.kind == "sma":
+                outs[s.out_col] = np.array(
+                    [sma_kernel(row, s.window) for row in M])
                 continue
-            scatter(outs[s.out_col], R, idx_segs)
-        for name, arr in outs.items():
-            pdf[name] = arr
-        yield pdf
+            C, clens, idx = nonnull[s.value_col or value_col]
+            if s.kind == "ema":
+                Rc = kernels.ema_fold2d(C, 2.0 / (float(s.window) + 1.0))
+            elif s.kind == "macd":
+                Rc = (kernels.ema_fold2d(C, 2.0 / 13.0)
+                      - kernels.ema_fold2d(C, 2.0 / 27.0))
+            else:
+                Rc = kernels.rsi_fold2d(C, clens, s.window)
+            R = np.full(M.shape, np.nan)
+            for g, ix in enumerate(idx):
+                R[g, ix] = Rc[g, : ix.shape[0]]
+            outs[s.out_col] = R
+        return outs
 
-    return (
-        df.repartition(*partition_by)
-        .sortWithinPartitions(*partition_by, *order_by)
-        .mapInPandas(compute_partition, out_schema)
-    )
+    return fold_series(df, partition_by, order_by, value_cols,
+                       [s.out_col for s in specs], fold)
 
 
 def _split_hot_series(

@@ -5,14 +5,9 @@ Extends the reference's sma/ema/rsi/macd family
 (``/root/reference/src/functions/``) along the same path as
 ``technical.py``/``technical2.py``. Two execution shapes:
 
-- **Recursive chains (TRIX, PPO, ADX)** run in the
-  ``with_indicators(method="partition")`` shape: ONE hash shuffle on
-  the series key, JVM-side sort within partitions, then ONE
-  ``mapInPandas`` call per shuffle partition that packs every series
-  into a NaN-padded (G, maxlen) matrix and runs the folds
-  ROW-PARALLEL (``kernels.ema_fold2d`` — one vectorized step per time
-  index instead of a Python call per series; a 1500-series partition
-  costs one Arrow round-trip, not 1500). Per-element expression trees
+- **Recursive chains (TRIX, PPO, ADX)** run through
+  ``plans.series.fold_series``, with the folds ROW-PARALLEL across
+  series (``kernels.ema_fold2d``). Per-element expression trees
   match the DuckDB oracle lambdas bit-for-bit. Hot single-key series
   can be bucketed through ``functions/segmented.py`` like the A1-A4
   kernels. Values must be null-free (the oracles' prefix folds have
@@ -37,9 +32,11 @@ import numpy as np
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, StructField, StructType
 
-from ..plans.series import round_portable, round_portable_duck, row_frame
+from ..plans.indicator_queries import _ema_fold_sql
+from ..plans.series import (
+    fold_series, round_portable, round_portable_duck, row_frame,
+)
 from ..sources.tables import load
 
 __all__ = ["trix", "ppo", "adx", "aroon"]
@@ -48,60 +45,10 @@ __all__ = ["trix", "ppo", "adx", "aroon"]
 def _partitioned(df: DataFrame, value_col: str, keys: Sequence[str],
                  order: Sequence[str], new_cols: Sequence[str],
                  matrix_fn) -> DataFrame:
-    """Partition-mode kernel runner (see module docstring): shuffle on
-    ``keys``, sort within partitions by (keys, order), pack each
-    partition's series into a NaN-padded matrix, and call
-    ``matrix_fn(M, lens) -> {col: (G, L) matrix}`` once per partition.
-    NaN outputs map to NULL; results round portably."""
-    import numpy as np
-    import pandas as pd
-
-    from . import kernels
-
-    schema = StructType(
-        df.schema.fields
-        + [StructField(c, DoubleType()) for c in new_cols]
-    )
-    kcols = list(keys)
-    sort_cols = kcols + list(order)
-
-    def compute(batches):
-        pdfs = list(batches)
-        if not pdfs:
-            return
-        pdf = (pd.concat(pdfs, ignore_index=True)
-               if len(pdfs) > 1 else pdfs[0])
-        if len(pdf) == 0:
-            return
-        # Null-safe group-boundary detection (same contract as
-        # indicators.with_indicators partition mode).
-        kdf = pdf[kcols]
-        shifted = kdf.shift()
-        changed = (
-            (kdf.ne(shifted) & ~(kdf.isna() & shifted.isna()))
-            .any(axis=1)
-            .to_numpy()
-        )
-        changed[0] = True
-        starts = np.flatnonzero(changed)
-        ends = np.append(starts[1:], len(pdf))
-        v = pdf[value_col].to_numpy(dtype="float64", na_value=np.nan)
-        M, _lens = kernels.pack_segments(
-            [v[s:e] for s, e in zip(starts, ends)])
-        outs = matrix_fn(M, _lens)
-        for c in new_cols:
-            full = np.full(len(pdf), np.nan)
-            R = outs[c]
-            for g, (s, e) in enumerate(zip(starts, ends)):
-                full[s:e] = R[g, : e - s]
-            pdf[c] = full
-        yield pdf
-
-    out = (
-        df.repartition(*kcols)
-        .sortWithinPartitions(*sort_cols)
-        .mapInPandas(compute, schema)
-    )
+    """``fold_series`` over ``value_col``; NaN outputs map to NULL and
+    results round portably."""
+    out = fold_series(df, keys, order, [value_col], new_cols,
+                      lambda mats, lens: matrix_fn(mats[value_col], lens))
     for c in new_cols:
         out = out.withColumn(
             c, round_portable(F.when(~F.isnan(F.col(c)), F.col(c)))
@@ -261,11 +208,6 @@ def aroon(df: DataFrame, value_col: str, keys: Sequence[str],
 
 _EVENTS_W = "PARTITION BY user_id ORDER BY ts, event_id"
 _PFX = f"WINDOW pfx AS ({_EVENTS_W} ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
-
-
-def _ema_fold_sql(list_expr: str, alpha: str) -> str:
-    return (f"list_reduce({list_expr}, "
-            f"(acc, v) -> {alpha}*v + (1.0 - {alpha})*acc)")
 
 
 _TRIX_N = 12

@@ -874,8 +874,8 @@ def simhash_candidate_count(df: DataFrame, text_col: str = "text",
         .groupBy("tk.t", "tk.sg", "tk.k")
         .agg(F.count(F.lit(1)).alias("__m"))
         .agg(F.expr(
-            "CAST(sum(sg * (__m * (__m - 1) DIV 2)) AS BIGINT) "
-            "AS n_candidates"))
+            "coalesce(CAST(sum(sg * (__m * (__m - 1) DIV 2)) AS BIGINT), "
+            "0L) AS n_candidates"))
     )
 
 

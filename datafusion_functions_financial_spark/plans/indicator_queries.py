@@ -1,8 +1,7 @@
 """Indicator query/oracle pairs (reference parity surface, SURVEY §2.A A1-A5).
 
-The Spark side computes indicators with ``with_indicators`` (grouped
-``applyInPandas`` over the partition key — one shuffle, Arrow batched)
-or the Catalyst-native SMA window. The oracle side expresses the same
+The Spark side computes indicators with ``with_indicators`` (one
+``plans.series.fold_series`` pass) or the Catalyst-native SMA window. The oracle side expresses the same
 recurrences in DuckDB SQL using prefix-list folds (``list_reduce``)
 with floating-point expression trees identical to the kernels, so the
 two sides agree bit-for-bit before rounding.

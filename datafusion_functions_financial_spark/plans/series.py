@@ -1,4 +1,5 @@
-"""Shared series configs + rounding conventions for query/oracle pairs.
+"""Shared series configs, rounding conventions, row windows and the
+partition-packed series fold (``fold_series``) for query/oracle pairs.
 
 Every declared query is built twice from the same config: once as a
 PySpark DataFrame plan and once as ANSI SQL for the DuckDB oracle, so
@@ -11,10 +12,16 @@ written with identical floating-point expression trees on both sides
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Sequence
+from typing import Callable, Mapping, Sequence
 
-from pyspark.sql import Column, Window, WindowSpec
+import numpy as np
+import pandas as pd
+
+from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StructField, StructType
+
+from ..functions.kernels import pack_segments
 
 ROUND_DP = 4
 
@@ -56,6 +63,77 @@ def row_frame(keys: Sequence[str], order: Sequence[str],
               n: int) -> WindowSpec:
     """The last ``n`` rows (current row included) of ``row_window``."""
     return row_window(keys, order).rowsBetween(-(n - 1), 0)
+
+
+def fold_series(
+    df: DataFrame,
+    keys: Sequence[str],
+    order: Sequence[str],
+    value_cols: Sequence[str],
+    out_cols: Sequence[str],
+    fold: Callable[[Mapping[str, np.ndarray], np.ndarray],
+                   Mapping[str, np.ndarray]],
+) -> DataFrame:
+    """Append ``out_cols`` (DOUBLE, NaN allowed) from a fold over every
+    series of ``df``, the Spark form of the reference's whole-partition
+    window UDFs.
+
+    One shuffle on ``keys``, a JVM-side sort within partitions by
+    (keys, order), then one ``mapInPandas`` call per shuffle partition.
+    There the rows of each series are contiguous; every ``value_cols``
+    entry is packed into a NaN-padded (series x time) float64 matrix
+    and ``fold(mats, lens)`` runs ONCE for the whole partition, so
+    thousands of short series cost one Arrow round-trip, not one Python
+    call each. ``mats`` maps each value column to its matrix, ``lens``
+    holds the series lengths, and the fold returns one matrix of the
+    same shape per out column; cells past ``lens[g]`` are ignored.
+    Memory is O(shuffle partition) in the Python worker.
+    """
+    keys, order = list(keys), list(order)
+    value_cols, out_cols = list(value_cols), list(out_cols)
+    schema = StructType(
+        df.schema.fields
+        + [StructField(c, DoubleType(), True) for c in out_cols]
+    )
+
+    def run(batches):
+        pdfs = list(batches)
+        if not pdfs:
+            return
+        pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
+        if len(pdf) == 0:
+            return
+        # NULL keys form one series, as in groupBy: pandas NaN != NaN,
+        # so a plain ne(shift) would start a series at every NULL row.
+        k = pdf[keys]
+        shifted = k.shift()
+        changed = (
+            (k.ne(shifted) & ~(k.isna() & shifted.isna()))
+            .any(axis=1)
+            .to_numpy()
+        )
+        changed[0] = True
+        starts = np.flatnonzero(changed)
+        ends = np.append(starts[1:], len(pdf))
+        lens = ends - starts
+        mats = {}
+        for c in value_cols:
+            v = pdf[c].to_numpy(dtype=np.float64, na_value=np.nan)
+            mats[c] = pack_segments([v[s:e] for s, e in zip(starts, ends)])[0]
+        outs = fold(mats, lens)
+        for c in out_cols:
+            full = np.full(len(pdf), np.nan)
+            R = outs[c]
+            for g, (s, e) in enumerate(zip(starts, ends)):
+                full[s:e] = R[g, : e - s]
+            pdf[c] = full
+        yield pdf
+
+    return (
+        df.repartition(*keys)
+        .sortWithinPartitions(*keys, *order)
+        .mapInPandas(run, schema)
+    )
 
 
 @dataclass(frozen=True)

@@ -63,22 +63,31 @@ def test_null_partition_keys_form_one_group(spark):
     assert fast[(None, 11)][0] is not None
 
 
-def test_partition_and_group_methods_agree(random_series_df):
+def test_partition_and_group_methods_agree(spark, random_series_df):
+    # Second input: the same series read in Arrow batches of 3 rows, so
+    # each partition's series arrive split over many batches.
     cols = [s.out_col for s in SPECS]
-    fast = _collect(
-        ind.with_indicators(random_series_df, "x", ["seq"], ["k"], SPECS,
-                            method="partition"),
-        cols,
-    )
-    slow = _collect(
-        ind.with_indicators(random_series_df, "x", ["seq"], ["k"], SPECS,
-                            method="group"),
-        cols,
-    )
-    assert fast.keys() == slow.keys()
-    for key in fast:
-        for a, b in zip(fast[key], slow[key]):
-            if a is None or (isinstance(a, float) and np.isnan(a)):
-                assert b is None or (isinstance(b, float) and np.isnan(b))
-            else:
-                assert a == b, key  # bit-identical: same kernels
+    chunk_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    default_chunk = spark.conf.get(chunk_key)
+    for chunk_rows in (default_chunk, "3"):
+        spark.conf.set(chunk_key, chunk_rows)
+        try:
+            fast = _collect(
+                ind.with_indicators(random_series_df, "x", ["seq"], ["k"],
+                                    SPECS, method="partition"),
+                cols,
+            )
+            slow = _collect(
+                ind.with_indicators(random_series_df, "x", ["seq"], ["k"],
+                                    SPECS, method="group"),
+                cols,
+            )
+        finally:
+            spark.conf.set(chunk_key, default_chunk)
+        assert fast.keys() == slow.keys()
+        for key in fast:
+            for a, b in zip(fast[key], slow[key]):
+                if a is None or (isinstance(a, float) and np.isnan(a)):
+                    assert b is None or (isinstance(b, float) and np.isnan(b))
+                else:
+                    assert a == b, key  # bit-identical: same kernels

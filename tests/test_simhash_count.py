@@ -32,11 +32,14 @@ def test_count_matches_on_exact_clones(spark):
     # ALL bands — maximal cross-band overlap, so any sign error in the
     # inclusion-exclusion shows up immediately (expected 4 * C(10,2)
     # plus whatever chance collisions add, but both paths must agree).
+    # Second input: an empty corpus, where the count is 0, not NULL.
     rows = [(i, f"clone group {i % 4} body text repeated tokens")
             for i in range(40)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    joined = dd.simhash_candidates(df).count()
-    counted = dd.simhash_candidate_count(
-        df).collect()[0]["n_candidates"]
-    assert counted == joined
-    assert counted >= 4 * 45
+    schema = "doc_id long, text string"
+    for data, floor in ((rows, 4 * 45), ([], 0)):
+        df = spark.createDataFrame(data, schema)
+        joined = dd.simhash_candidates(df).count()
+        counted = dd.simhash_candidate_count(
+            df).collect()[0]["n_candidates"]
+        assert counted == joined
+        assert counted >= floor
